@@ -48,6 +48,11 @@ object GraftSession {
       // bench run what a deployment runs
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      // local checkpoint, commit-log and state-store files: stock Hadoop
+      // forks a chmod per created file and two readlinks per rename
+      // without libhadoop (ForkFreeLocalFs); other schemes are untouched
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

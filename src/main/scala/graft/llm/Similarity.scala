@@ -46,6 +46,7 @@ object Similarity {
       implicit seqEnc: org.apache.spark.sql.Encoder[Seq[(Long, Double)]])
       extends org.apache.spark.sql.expressions.Aggregator[
         (Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
+    require(k > 0, s"TopKAggregator: k must be positive, got $k")
     private def keep(s: Seq[(Long, Double)]): Seq[(Long, Double)] =
       s.sortBy { case (id, score) => (-score, id) }.take(k)
     override def zero: Seq[(Long, Double)] = Seq.empty

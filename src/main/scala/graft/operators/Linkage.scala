@@ -143,17 +143,17 @@ object Linkage {
         // map stages racing the cold cache fill — r16) where one
         // groupBy ships it once and needs no cache at all (r17: q166
         // fill 1.25 s + 2 × 0.67 s cache-read map stages → one 0.7 s
-        // aggregation). ids within a bucket are distinct (one row per
-        // id upstream, variants deduped per name), so the sorted
-        // collect_list yields each unordered pair exactly once with
-        // id_a < id_b — identical to the join's a < b filter. Bucket
+        // aggregation). The bucket's ids are collected as a SET: an id
+        // on two input rows (duplicate ids) lands in a bucket once, so
+        // the sorted set yields each unordered pair exactly once with
+        // id_a < id_b and never (x, x) — the join's a < b filter. Bucket
         // state is bounded by the variant-bucket size — the SAME data
         // property that already bounds the join's Σ bucket² output;
         // degenerate-hot corpora use the maxBucket star-cap branch.
         val n = size(col("ids"))
         keyed
           .groupBy((blockCols :+ "band").map(col): _*)
-          .agg(sort_array(collect_list(col(idCol))).as("ids"))
+          .agg(sort_array(collect_set(col(idCol))).as("ids"))
           .where(n >= 2)
           .select(explode(flatten(transform(sequence(lit(1), n - 1), i =>
             transform(sequence(i + 1, n), j =>

@@ -240,7 +240,7 @@ object AnalyticQueries {
     // distance from the smallest part over the order–part bipartite
     // graph, 3 rounds. The missing iterative shape next to PageRank
     // (fixed-point scoring) and connected components (label collapse):
-    // per round, the frontier expands through TWO co-keyed equi-joins
+    // per round, the frontier expands through TWO semi-joins
     // (part→order, order→part), dedups, and anti-joins the reached set —
     // every shuffle is keyed, the driver holds only the loop counter and
     // one seed scalar, and state per round is the reached table (≤ |V|).
@@ -248,15 +248,15 @@ object AnalyticQueries {
     "q147_bfs_reach" -> ((s, dir) => {
       import s.implicits._
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // RAW edge rows, no distinct: both hop expansions below are
-      // semi-joins, so duplicate (o, p) rows cannot duplicate anything
-      // — the old inner-join form needed the deduped edge table (and
-      // paid its full shuffle) just to bound the join fan-out.
-      // PRE-PARTITIONED once by each hop key and persisted: every
-      // round's part→order and order→part expansion then satisfies its
-      // join distribution from the cache, so only the (small) frontier
-      // side shuffles per round — the old shape re-exchanged the full
-      // edge table on every one of the 6 hop joins (§2.4).
+      // RAW edge rows, no distinct, persisted once as scanned: both hop
+      // expansions below are semi-joins, so duplicate (o, p) rows cannot
+      // duplicate anything — the old inner-join form needed the deduped
+      // edge table (and paid its full shuffle) just to bound the join
+      // fan-out. Each expansion (and the anti-join against the reached
+      // set) broadcasts its small side — the frontier parts, the
+      // adjacent orders, the reached set — and streams the cached edges
+      // past it, so the edge table is never exchanged; a round's only
+      // shuffles are its two distincts, over the rows the frontier reaches.
       val edges = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .persist(lvl)

@@ -17,9 +17,12 @@ import org.apache.spark.sql.streaming._
   * buffered. Late events (ts < watermark at ingress) drop, the same
   * zero-lateness contract as the process-window family.
   *
-  * State per user is the open tail only (closed sessions leave state),
-  * so state is bounded by a user's in-flight burst, not stream history —
-  * the same bounded-state discipline as StreamingNearDup's rosters.
+  * State per user is the open tail's events, one Long (the `closed`
+  * session ordinal, kept for every user ever seen so the next session
+  * numbers on) and the pending timers. Closed sessions' events leave the
+  * buffer, so the events held are bounded by the users' in-flight
+  * bursts; the ordinals grow with the number of distinct users, one
+  * Long each, not with the events.
   * Ordinals are assigned in watermark order, which IS event-time order
   * across sessions, so the labels match the batch computation exactly
   * (spec: fixture events replayed in batches against the q107 shape).

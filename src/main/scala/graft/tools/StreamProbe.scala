@@ -1,15 +1,13 @@
 package graft.tools
 
 /** One-off throughput probe: streaming slice rps at increasing volumes
-  * (fixed micro-batch planning overhead amortizes with volume).
+  * (fixed micro-batch overhead amortizes with volume). The session comes
+  * from `GraftSession.builder`, so the probe measures the engine
+  * configuration the tests, the tools and the benchmark run.
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (rows <- Seq(5000000L, 20000000L, 40000000L)) {
       val r1 = graft.Bench.streamingMapCountRps(spark, rows)

@@ -148,6 +148,20 @@ class LinkageScaleSpec extends AnyFunSuite {
     }
   }
 
+  test("duplicate ids never yield a self-pair; pairs stay distinct with id_a < id_b") {
+    import spark.implicits._
+    // id 1 on three rows (an exact duplicate and a second name), id 2
+    // near id 1's names, id 3 near them too but in another block
+    val c = Seq(
+      (1L, "Customer#000000001", 1L, "A"), (1L, "Customer#000000001", 1L, "A"),
+      (1L, "Customer#000000002", 1L, "A"), (2L, "Customer#000000003", 1L, "A"),
+      (3L, "Customer#000000001", 2L, "A"))
+      .toDF("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
+    val pairs = Linkage.candidatePairs(c, "c_custkey", "c_name", blockCols)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs === Seq((1L, 2L)), s"got $pairs")
+  }
+
   test("opt-in star-capped candidates equal the exhaustive join below the cap") {
     val exhaustive = Linkage.candidatePairs(customers, "c_custkey", "c_name",
       blockCols).collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -44,6 +44,15 @@ class SimilaritySpec extends AnyFunSuite {
     knn.foreach(r => assert(r.getAs[Long]("query_id") !== r.getAs[Long]("neighbor_id")))
   }
 
+  test("top-k with k = 0 fails at construction with a named error") {
+    import spark.implicits._
+    val e = intercept[IllegalArgumentException](new Similarity.TopKAggregator(0))
+    assert(e.getMessage.contains("TopKAggregator") && e.getMessage.contains("got 0"))
+    val emb = graft.core.Tables.embeddings(spark, sfDir)
+    intercept[IllegalArgumentException](Similarity.knnBruteForce(emb,
+      emb.where(col("vec_id") < 3), "vec_id", "embedding", k = 0))
+  }
+
   test("hyperplane buckets are deterministic and bounded by 2^planes") {
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val b1 = emb.select(col("vec_id"),
