@@ -28,6 +28,13 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.queries ++ WindowQueries.queries ++ DataStreamQueries.queries ++ LlmQueries.queries ++ EmbeddingQueries.queries ++ ExtendedRelationalQueries.queries ++ AnalyticQueries.queries ++ PipelineQueries.queries ++ OperationalQueries.queries ++ QualityQueries.queries ++ StatsQueries.queries ++ CorpusQueries.queries ++ EvalQueries.queries ++ VectorQueries.queries ++ CurationQueries.queries
 
+  /** The queries whose names start with one of `prefixes`; an empty list
+    * selects every query. Iteration order is the `queries` map's.
+    */
+  def select(prefixes: Seq[String]): Map[String, (SparkSession, String) => DataFrame] =
+    if (prefixes.isEmpty) queries
+    else queries.filter { case (n, _) => prefixes.exists(n.startsWith) }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

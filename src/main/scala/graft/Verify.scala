@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,22 +8,10 @@ object Verify {
     // the dump to matching queries (builder fast-iteration; the driver
     // always calls with exactly two args = full dump).
     val Array(sfDir, outDir, prefixes @ _*) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same extension set a deployment runs (native SQL fns + graft
-      // optimizer rules) — the oracle gate must verify the REAL plans
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the engine configuration the tests, Bench and the probes run —
+    // the oracle gate verifies the plans a deployment runs
+    val spark = graft.core.GraftSession.getOrCreate()
     new java.io.File(outDir).mkdirs()
-    val selected =
-      if (prefixes.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => prefixes.exists(n.startsWith) }
     // Output-boundary type alignment: the driver compares at the PANDAS
     // level — the DuckDB oracle arrives via fetchdf(), which converts every
     // DECIMAL column to float64, while a Spark decimal parquet column
@@ -45,7 +32,7 @@ object Verify {
       }
       df.select(casts.toIndexedSeq: _*)
     }
-    selected.foreach { case (name, fn) =>
+    SparkEntry.select(prefixes).foreach { case (name, fn) =>
       try alignOutputTypes(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

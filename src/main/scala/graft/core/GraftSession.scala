@@ -13,13 +13,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  /** Defaults chosen for the local[32] harness but expressed the way a
+  /** Defaults chosen for a local harness but expressed the way a
     * cluster deployment would: AQE on (runtime skew/coalesce), broadcast
     * threshold generous enough to broadcast TPC-H dims, shuffle
     * partitions sized to cores rather than Spark's default 200.
     */
-  def builder(master: String = "local[32]",
-              shufflePartitions: Int = 32): SparkSession.Builder =
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -54,12 +53,15 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 
+  /** The session every entry point runs (Bench, Verify, the probes):
+    * `local[SPARK_GRAFT_CPUS]` (default 4) with one shuffle partition per
+    * core. The core count is read here and nowhere else, so a bench leg,
+    * an oracle dump and a probe asked for N cores all get N.
+    */
   def getOrCreate(): SparkSession = {
-    val s = builder().getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val s = builder(s"local[$cpus]", cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // native expressions on the SQL surface (word_shingles,
-    // minhash_signature, cosine_similarity)
-    graft.llm.GraftFunctions.register(s)
     s
   }
 }
@@ -196,22 +198,4 @@ object Tables {
   }
   def documents(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(s"$dir/documents.parquet")
   def embeddings(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(s"$dir/embeddings.parquet")
-
-  /** Register every fixture table as a temp view for the SQL surface —
-    * through the typed accessors, so the SQL views carry the same schemas
-    * (notably events.ts normalized to TimestampType, not the raw nanos
-    * BIGINT the legacy parquet flag exposes).
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit = {
-    region(spark, dir).createOrReplaceTempView("region")
-    nation(spark, dir).createOrReplaceTempView("nation")
-    customer(spark, dir).createOrReplaceTempView("customer")
-    supplier(spark, dir).createOrReplaceTempView("supplier")
-    part(spark, dir).createOrReplaceTempView("part")
-    orders(spark, dir).createOrReplaceTempView("orders")
-    lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    events(spark, dir).createOrReplaceTempView("events")
-    documents(spark, dir).createOrReplaceTempView("documents")
-    embeddings(spark, dir).createOrReplaceTempView("embeddings")
-  }
 }

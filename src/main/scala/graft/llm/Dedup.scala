@@ -57,17 +57,6 @@ object Dedup {
   /** Numeric view of a signature element (for inspection outputs). */
   def minhashValue(hex: Column): Column = conv(hex, 16, 10).cast("long")
 
-  /** LSH bands: hash each row-group of the signature into a bucket id.
-    * CAUTION: don't `explode` this directly over an inline signature
-    * expression — generators re-evaluate their child per output row;
-    * project the signature first (see nearDuplicatePairs).
-    */
-  def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"),
-        md5(concat_ws(",", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))))
-          .as("bucket")))
-
   /** Exact Jaccard over two pre-distinct shingle arrays:
     * |∩| / (|a| + |b| − |∩|). Native single-pass expression
     * ([[JaccardExpr]] — value-identical to the HOF
@@ -112,8 +101,6 @@ object Dedup {
     (0 until bits).map { i =>
       shiftright(a.bitwiseXOR(b), i).bitwiseAND(lit(1L))
     }.reduce(_ + _)
-
-  def hamming16(a: Column, b: Column): Column = hamming(a, b, 16)
 
   /** SimHash near-duplicate pairs with Hamming distance ≤ `maxHamming`
     * over a 64-bit simhash. Candidate generation uses the pigeonhole

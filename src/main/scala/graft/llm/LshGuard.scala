@@ -70,17 +70,8 @@ object LshGuard {
       val base = t.groupBy(keys: _*)
         .agg(sort_array(collect_list(col(idCol))).as("ids"))
         .where(n >= 2)
-      val onePer = flatten(transform(sequence(lit(1), n - 1), i =>
-        transform(sequence(i + 1, n), j =>
-          struct(element_at(col("ids"), i).as("id_a"),
-            element_at(col("ids"), j).as("id_b")))))
-      val bothDirs = flatten(transform(sequence(lit(1), n - 1), i =>
-        flatten(transform(sequence(i + 1, n), j =>
-          array(struct(element_at(col("ids"), i).as("id_a"),
-              element_at(col("ids"), j).as("id_b")),
-            struct(element_at(col("ids"), j).as("id_a"),
-              element_at(col("ids"), i).as("id_b")))))))
-      base.select(explode(if (ordered) onePer else bothDirs).as("pr"))
+      base.select(explode(graft.operators.Pairs.inSorted(col("ids"),
+          "id_a", "id_b", bothDirections = !ordered)).as("pr"))
         .select(col("pr.id_a"), col("pr.id_b"))
         .where(if (ordered) col("id_a") < col("id_b")
           else col("id_a") =!= col("id_b"))

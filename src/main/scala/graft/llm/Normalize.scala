@@ -129,12 +129,6 @@ object Normalize {
   def forDedup(text: Column): Column =
     trim(regexp_replace(normalizePunct(nfc(repairMojibake(text))),
       "\\s+", " "))
-
-  /** [[TextFunctions.tokens]] over the normalized string — the drop-in
-    * token source for normalization-aware chunk/exact dedup.
-    */
-  def normalizedTokens(text: Column): Column =
-    TextFunctions.tokens(forDedup(text))
 }
 
 /** Native Unicode-NFC expression (java.text.Normalizer, the JDK's

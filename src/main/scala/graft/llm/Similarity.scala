@@ -365,27 +365,6 @@ object Similarity {
       .where(col("cos") >= threshold)
   }
 
-  /** ANN: nearest neighbor per vector searching ONLY its hyperplane bucket
-    * (the scale path — bucket-key self-join, no cross join). Vectors alone
-    * in their bucket produce no row.
-    */
-  def annNearestInBucket(emb: DataFrame, idCol: String, vecCol: String,
-                         planes: Int, dims: Int,
-                         maxBucket: Int = 10000): DataFrame = {
-    val v = emb.select(col(idCol).as("vec_id"),
-      col(vecCol).cast("array<double>").as("v"))
-      .transform(graft.core.Caching.persist)
-    // persisted like the banded paths: the guard's count aggregation and
-    // both self-join sides would otherwise each recompute the planes×dims
-    // dot products over the corpus
-    val banded = v.select(col("vec_id"),
-      hyperplaneBucket(col("v"), planes, dims).as("bucket"))
-      .transform(graft.core.Caching.persist)
-    val cand = LshGuard.guardedCandidates(banded, Seq("bucket"),
-      "vec_id", maxBucket, ordered = false)
-    topKByQuery(scoreCandidates(cand, v), k = 1, withRank = false)
-  }
-
   /** Banded ANN top-k: the k nearest neighbors per vector among candidates
     * sharing ANY band bucket. The ranking sorts only each vector's
     * candidate set (bounded by band-bucket sizes), never the corpus — the

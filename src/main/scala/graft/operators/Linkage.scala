@@ -155,10 +155,8 @@ object Linkage {
           .groupBy((blockCols :+ "band").map(col): _*)
           .agg(sort_array(collect_set(col(idCol))).as("ids"))
           .where(n >= 2)
-          .select(explode(flatten(transform(sequence(lit(1), n - 1), i =>
-            transform(sequence(i + 1, n), j =>
-              struct(element_at(col("ids"), i).as("id_a"),
-                element_at(col("ids"), j).as("id_b")))))).as("pr"))
+          .select(explode(Pairs.inSorted(col("ids"), "id_a", "id_b",
+            bothDirections = false)).as("pr"))
           // pairs sharing several variants collapse here; distinct runs
           // over candidate ids only (two longs), never the payload
           .select(col("pr.id_a"), col("pr.id_b"))

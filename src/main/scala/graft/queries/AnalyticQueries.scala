@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
 import graft.core.Money.{dec, sumDec, sumDecFast}
+import graft.operators.Pairs
 
 /** Round-4 analytic widening: pivot/unpivot reshaping, blocked fuzzy
   * matching, arg-extrema, the remaining analytic window functions,
@@ -44,10 +45,8 @@ object AnalyticQueries {
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_list(col("l_partkey"))).as("ps"))
       .where(n >= 2)
-      .select(explode(flatten(transform(sequence(lit(1), n - 1), i =>
-        transform(sequence(i + 1, n), j =>
-          struct(element_at(col("ps"), i).as("u"),
-            element_at(col("ps"), j).as("v")))))).as("pr"))
+      .select(explode(Pairs.inSorted(col("ps"), "u", "v",
+        bothDirections = false)).as("pr"))
       .filter(col("pr.u") < col("pr.v"))
       .groupBy(col("pr.u").as("u"), col("pr.v").as("v"))
       .agg(count(lit(1)).as("support"))
@@ -460,10 +459,8 @@ object AnalyticQueries {
       val nb = size(col("bs"))
       val pairs = baskets
         .where(nb >= 2)
-        .select(explode(flatten(transform(sequence(lit(1), nb - 1), i =>
-          transform(sequence(i + 1, nb), j =>
-            struct(element_at(col("bs"), i).as("brand_a"),
-              element_at(col("bs"), j).as("brand_b")))))).as("pr"))
+        .select(explode(Pairs.inSorted(col("bs"), "brand_a", "brand_b",
+          bothDirections = false)).as("pr"))
         .groupBy(col("pr.brand_a").as("brand_a"),
           col("pr.brand_b").as("brand_b"))
         .agg(count(lit(1)).as("n_ab"))

@@ -132,14 +132,11 @@ object CorpusQueries {
       // is ≤ 100 docs; cd rows are distinct (chash, doc_id), so sorted
       // positions i < j enumerate each doc pair once with doc_a < doc_b
       // — identical to the join's a < b rows, once per shared chunk.
-      val n = size(col("ds"))
       val edges = cd.join(shared, Seq("chash"), "left_semi")
         .groupBy(col("chash"))
         .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .select(explode(flatten(transform(sequence(lit(1), n - 1), i =>
-          transform(sequence(i + 1, n), j =>
-            struct(element_at(col("ds"), i).as("doc_a"),
-              element_at(col("ds"), j).as("doc_b")))))).as("pr"))
+        .select(explode(graft.operators.Pairs.inSorted(col("ds"), "doc_a",
+          "doc_b", bothDirections = false)).as("pr"))
         .groupBy(col("pr.doc_a").as("doc_a"), col("pr.doc_b").as("doc_b"))
         .agg(count(lit(1)).as("n_shared"))
         .where(col("n_shared") >= 2L)

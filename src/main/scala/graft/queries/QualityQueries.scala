@@ -203,13 +203,8 @@ object QualityQueries {
         .agg(sort_array(array_distinct(collect_list(col("l_partkey"))))
           .as("ps"))
         .where(n >= 2)
-        .select(explode(flatten(transform(sequence(lit(1), n - 1), i =>
-          flatten(transform(sequence(i + 1, n), j =>
-            array(struct(element_at(col("ps"), i).as("item"),
-                element_at(col("ps"), j).as("rec")),
-              struct(element_at(col("ps"), j).as("item"),
-                element_at(col("ps"), i).as("rec"))))))))
-          .as("pr"))
+        .select(explode(graft.operators.Pairs.inSorted(col("ps"), "item",
+          "rec", bothDirections = true)).as("pr"))
         .groupBy(col("pr.item").as("item"), col("pr.rec").as("rec"))
         .agg(count(lit(1)).as("cnt"))
       val topk = new graft.llm.Similarity.TopKAggregator(3).toColumn

@@ -31,4 +31,9 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty
 
+  /** Block until the `private[spark]` listener bus has delivered every
+    * queued event, so a listener's job records are complete when read.
+    */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

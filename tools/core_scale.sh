@@ -24,7 +24,7 @@ OUT=/tmp/core_scale_lines.jsonl
 run() {
   local cpus="$1"
   SPARK_GRAFT_CPUS="$cpus" SPARK_GRAFT_SWEEPS=1 \
-    sbt -batch "runMain graft.tools.CoreScale $DIR" \
+    sbt -batch "runMain graft.tools.Probe scale $DIR" \
     | grep '"tool":"core_scale"' | sed 's/^\[info\] //' | tail -1 >> "$OUT"
 }
 run 32; run 8; run 32; run 8
